@@ -1,15 +1,16 @@
 """Per-batch CDC apply — the engine's ReorderFiles.onTrigger analogue
 (reference ReorderFiles.kt:329-420): parse/validate → resolve instructions →
-apply as one atomic state transition → emit lineage summary.
+apply as one atomic state transition.
 
-``apply_batch`` is pure DataFrame-in/DataFrame-out (used by tests and by the
-pure-SQL-checkable catalog queries); ``table.lake.LakeTable.merge_batch``
-wires the same logic into bucket-pruned copy-on-write commits.
+:func:`resolve_batch` is the one resolve chain. ``table.lake.LakeTable.
+merge_batch`` wires it into bucket-pruned copy-on-write commits;
+:func:`apply_log` (tests) and :func:`apply_derived_log` (the pure-SQL-
+checkable catalog queries) fold it over in-memory register state.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -18,29 +19,70 @@ from ..schemas import PAYLOAD_COLUMNS, promoted_columns
 from . import lww, resolve
 
 
-@dataclass
-class BatchResult:
-    state: DataFrame  # new register state
-    dead_letters: DataFrame
-    normalized_count: int = -1
-
-
-def apply_batch(
-    state_regs: DataFrame,
+def resolve_batch(
     events: DataFrame,
     payload_cols: list[str],
-) -> BatchResult:
-    """Apply one declarative batch of change events to register state."""
+    pre_visible: DataFrame | None,
+    lsn_watermark: int = 0,
+) -> tuple[DataFrame, DataFrame]:
+    """Resolve one declarative change batch against the pre-batch state:
+    validate → compaction floor → move expansion.
+
+    ``pre_visible`` is the visible state before the batch; move sources
+    resolve against it (ReorderFiles.kt:150-184). ``None`` declares that
+    the batch holds no valid move: the events are then only projected,
+    with no join.
+
+    ``lsn_watermark`` is the compaction replay floor
+    (``Manifest.lsn_watermark``): once compact_tombstones(w) dropped
+    tombstones below w, an event with lsn < w could resurrect a compacted
+    delete, so it is dead-lettered instead of applied.
+
+    Returns (normalized, dead). ``normalized`` has columns
+    ``NORMALIZED_COLS + payload_cols`` and op ∈ {insert, update, delete}.
+    ``dead`` has lsn, batch_id, op, reason and ``detail``: the raw wire
+    payload of an unparseable envelope (``extra['_raw']``, set by
+    sources.debezium), which keeps dead letters debuggable and keeps
+    DISTINCT corrupt lines distinct through the (fence_key, lsn, detail)
+    read-path dedupe — they all share a NULL lsn.
+    """
     promoted = [c for c in payload_cols if c not in PAYLOAD_COLUMNS]
-    good, dead1 = resolve.validate(events, promoted)
-    pre_visible = lww.visible(state_regs, payload_cols)
-    normalized, dead2 = resolve.expand_moves(good, pre_visible, payload_cols)
-    bregs = lww.batch_registers(normalized, payload_cols)
-    new_state = lww.combine_registers(state_regs, bregs, payload_cols)
-    dead = dead1.select("lsn", "batch_id", "op", "reason").unionByName(
-        dead2.select("lsn", "batch_id", "op", "reason")
+    good, dead = resolve.validate(events, promoted)
+    no_detail = F.lit(None).cast("string").alias("detail")
+    detail = (
+        F.try_element_at(F.col("extra"), F.lit("_raw")).alias("detail")
+        if "extra" in dead.columns
+        else no_detail
     )
-    return BatchResult(state=new_state, dead_letters=dead)
+    dead = dead.select("lsn", "batch_id", "op", "reason", detail)
+    if lsn_watermark > 0:
+        stale = F.lit("stale_lsn_below_compaction_watermark").alias("reason")
+        dead = dead.unionByName(
+            good.filter(F.col("lsn") < lsn_watermark)
+            .select("lsn", "batch_id", "op", stale, no_detail)
+        )
+        good = good.filter(F.col("lsn") >= lsn_watermark)
+    if pre_visible is None:
+        return good.select(*resolve.NORMALIZED_COLS, *payload_cols), dead
+    normalized, dead_moves = resolve.expand_moves(good, pre_visible, payload_cols)
+    return normalized, dead.unionByName(
+        dead_moves.select("lsn", "batch_id", "op", "reason", no_detail)
+    )
+
+
+def _fold(
+    state: DataFrame | None,
+    events: DataFrame,
+    payload_cols: list[str],
+    pre_visible: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Resolve one batch and merge its registers into ``state`` (None =
+    empty). Returns (new register state, dead letters)."""
+    normalized, dead = resolve_batch(events, payload_cols, pre_visible)
+    bregs = lww.batch_registers(normalized, payload_cols)
+    if state is not None:
+        bregs = lww.combine_registers(state, bregs, payload_cols)
+    return bregs, dead
 
 
 def apply_log(
@@ -57,16 +99,13 @@ def apply_log(
     constant no matter how many batches replay.
     """
     payload_cols = list(PAYLOAD_COLUMNS) + list(promoted_columns(max_schema_version))
-    state = lww.seed_registers(seed_df, payload_cols).localCheckpoint(eager=True)
+    state = lww.seed_registers(seed_df, payload_cols)
     deads = []
     for b in batches:
-        res = apply_batch(state, b, payload_cols)
-        state = res.state.localCheckpoint(eager=True)
-        deads.append(res.dead_letters)
-    dead = deads[0]
-    for d in deads[1:]:
-        dead = dead.unionByName(d)
-    return lww.visible(state, payload_cols), dead
+        state = state.localCheckpoint(eager=True)
+        state, dead = _fold(state, b, payload_cols, lww.visible(state, payload_cols))
+        deads.append(dead)
+    return lww.visible(state, payload_cols), reduce(DataFrame.unionByName, deads)
 
 
 def _empty_visible(spark: SparkSession, payload_cols: list[str]) -> DataFrame:
@@ -78,10 +117,11 @@ def _empty_visible(spark: SparkSession, payload_cols: list[str]) -> DataFrame:
 
 
 def apply_derived_log(
-    spark: SparkSession, good: DataFrame, payload_cols: list[str]
+    spark: SparkSession, events: DataFrame, payload_cols: list[str]
 ) -> DataFrame:
-    """Batch-ordered apply of a validated change log (single DataFrame with
-    a ``batch_id`` column) honoring move semantics, without a LakeTable.
+    """Batch-ordered apply of a change log (single DataFrame with a
+    ``batch_id`` column, raw or already validated — validating twice is a
+    no-op) honoring move semantics, without a LakeTable.
 
     Maximal runs of consecutive move-free batches fold in ONE pass (LWW
     registers are order-independent, so batch boundaries between them are
@@ -92,74 +132,35 @@ def apply_derived_log(
     visible transcripts state."""
     from ..streaming.runner import batch_move_runs  # local: avoids cycle
 
-    # Materialize the validated input ONCE: the move-detection collect, every
-    # run's filter and the move expansion all re-read it, and without this the
+    # Materialize the input ONCE: the move-detection collect, every run's
+    # filter and the move expansion all re-read it, and without this the
     # whole upstream derivation (scan + validate) re-executes per pass —
     # measured 13.4s vs 1.5s for the identical-size move-free query at sf0.1.
     # localCheckpoint (not persist) so the blocks are released by the context
     # cleaner when the returned plan is dropped, instead of pinning session
     # cache until an explicit unpersist nobody is positioned to call.
-    good = good.localCheckpoint(eager=True)
-    runs, has_move = batch_move_runs(good)
-    out_cols = resolve.NORMALIZED_COLS + payload_cols
+    events = events.localCheckpoint(eager=True)
+    runs, has_move = batch_move_runs(events)
     # Fold incrementally: registers are commutative+associative, so merging
-    # each run's batch registers into the accumulated state via
-    # combine_registers is exact — and the state computed for a move run's
-    # pre-batch resolution is REUSED by the final fold instead of re-folding
-    # every event from scratch (the round-2 formulation folded the full
-    # normalized union twice more per move batch).
+    # each run's batch registers into the accumulated state is exact — and
+    # the state computed for a move run's pre-batch resolution is REUSED by
+    # the final fold instead of re-folding every event from scratch.
     state: DataFrame | None = None
     for run in runs:
-        sub = good.filter(F.col("batch_id").isin(run))
+        pre = None
         if any(has_move[bid] for bid in run):
-            if state is not None:
+            if state is None:
+                pre = _empty_visible(spark, payload_cols)
+            else:
                 # the state feeds both the pre-visible expansion join and
-                # the final merge: checkpoint truncates its lineage so plan
-                # size stays constant per move batch (without it each move
-                # run embeds every earlier run's full plan — growth was
+                # the merge: checkpoint truncates its lineage so plan size
+                # stays constant per move batch (without it each move run
+                # embeds every earlier run's full plan — growth was
                 # exponential in move-batch count)
                 state = state.localCheckpoint(eager=True)
-            pre = (
-                _empty_visible(spark, payload_cols)
-                if state is None
-                else lww.visible(state, payload_cols)
-            )
-            normalized, _dead = resolve.expand_moves(sub, pre, payload_cols)
-        else:
-            normalized = sub.select(*out_cols)
-        bregs = lww.batch_registers(normalized, payload_cols)
-        state = (
-            bregs
-            if state is None
-            else lww.combine_registers(state, bregs, payload_cols)
-        )
+                pre = lww.visible(state, payload_cols)
+        sub = events.filter(F.col("batch_id").isin(run))
+        state, _dead = _fold(state, sub, payload_cols, pre)
     if state is None:
         return _empty_visible(spark, payload_cols)
     return lww.visible(state, payload_cols)
-
-
-def batch_lineage(
-    normalized: DataFrame,
-) -> DataFrame:
-    """Per-partition lineage counts + event-time bounds for the metrics
-    table (the grown-up version of the ReorderFiles result summary,
-    ReorderFiles.kt:396-406).
-
-    min_ts/max_ts bound each partition's event time; the caller derives the
-    epoch watermark (max over partitions) and per-partition watermark lag
-    (watermark − min_ts) from them. Event-time based, never wall-clock, so
-    replays report identical metrics (SURVEY.md §4 determinism rule).
-    """
-    cols = normalized.columns
-    ts = F.col("ts") if "ts" in cols else F.lit(None).cast("timestamp")
-    return (
-        normalized.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("events_applied"),
-            F.sum(F.when(F.col("op") != "delete", 1).otherwise(0)).alias("upserts"),
-            F.sum(F.when(F.col("op") == "delete", 1).otherwise(0)).alias("deletes"),
-            F.min(ts).alias("min_ts"),
-            F.max(ts).alias("max_ts"),
-        )
-    )

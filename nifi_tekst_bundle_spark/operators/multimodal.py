@@ -422,8 +422,9 @@ def image_phash(df: DataFrame, decode_stub: bool = False) -> DataFrame:
     Arrow-batched ``mapInPandas`` like :func:`extract_features` — the
     decode runs inside the scan, embarrassingly parallel, no per-row
     Python↔JVM calls. ``decode_stub=True`` swaps the pixel decode for
-    the md5-grid fake (:func:`_gray_grid_stub`) so the whole plumbing is
-    SQL-reproducible and driver-checked (catalog.media_phash_pairs);
+    the payload-prefix-as-pixels fake (:func:`_gray_grid_stub`) so the
+    whole plumbing is SQL-reproducible and driver-checked
+    (catalog.media_phash_pairs);
     the real path (PIL, or the built-in pure-python PNG/BMP pixel
     decoders) is pinned by pytest on real image bytes."""
 
@@ -464,7 +465,10 @@ def phash_near_dups(
     candidates come from ``n_bands`` equi-joins on (band_idx, band_bits)
     — never an all-pairs comparison — and the exact Hamming distance is
     verified only inside buckets. Output (id_a, id_b, hamming),
-    id_a < id_b, distinct."""
+    id_a < id_b, distinct. ``n_bands`` must divide 64, so the bands cover
+    every bit."""
+    if n_bands < 1 or 64 % n_bands:
+        raise ValueError(f"n_bands must divide 64, got {n_bands}")
     width = 64 // n_bands
     bands = sig.select(
         F.col(id_col),

@@ -48,19 +48,17 @@ def payload_exprs(promoted: list[str]) -> list[F.Column]:
     return cols
 
 
-def validate(events: DataFrame, promoted: list[str]) -> tuple[DataFrame, DataFrame]:
-    """Split the raw event stream into (good, dead_letter).
-
-    good has synthesized conv_ids and promoted extra columns materialized.
-    dead_letter keeps the raw event plus a ``reason`` column.
-    """
+def reject_reason() -> F.Column:
+    """Why a raw event is dead-lettered, or NULL for a valid one. Reads only
+    the envelope and key columns, never the payload, so it is the same
+    before and after schema-evolution promotion."""
     is_move = F.col("op") == "move"
     bad_src = (
         F.col("src_conv_id").isNull()
         | F.col("src_turn_idx").isNull()
         | ~F.col("src_conv_id").rlike(SAFE_KEY_REGEX)
     )
-    reason = (
+    return (
         # isNull explicitly: a NULL op (e.g. an unparseable wire envelope)
         # is "no valid operation" — without it the isin() null propagates
         # and the row would fall through to a misleading missing_key
@@ -81,7 +79,15 @@ def validate(events: DataFrame, promoted: list[str]) -> tuple[DataFrame, DataFra
         )
         .when(is_move & bad_src, F.lit("missing_key"))
     )
-    tagged = events.withColumn("_reason", reason)
+
+
+def validate(events: DataFrame, promoted: list[str]) -> tuple[DataFrame, DataFrame]:
+    """Split the raw event stream into (good, dead_letter).
+
+    good has synthesized conv_ids and promoted extra columns materialized.
+    dead_letter keeps the raw event plus a ``reason`` column.
+    """
+    tagged = events.withColumn("_reason", reject_reason())
     dead = tagged.filter(F.col("_reason").isNotNull()).withColumnRenamed(
         "_reason", "reason"
     )

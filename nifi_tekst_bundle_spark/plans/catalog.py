@@ -26,8 +26,19 @@ from ..functions import html as hf
 from ..functions import keys as kf
 from ..functions import text as tf
 from ..operators import dedup, lm, lww, resolve, similarity, transcript
+from ..operators.apply import apply_derived_log, resolve_batch
 
 CDC_PAYLOAD = ["role", "text", "tool"]
+
+
+def _normalized(events: DataFrame, payload: list[str] = CDC_PAYLOAD) -> DataFrame:
+    """A move-free change log resolved to normalized events."""
+    return resolve_batch(events, payload, None)[0]
+
+
+def _lww_state(events: DataFrame, payload: list[str] = CDC_PAYLOAD) -> DataFrame:
+    """Final visible state of a move-free change log (one LWW fold)."""
+    return lww.visible(lww.batch_registers(_normalized(events, payload), payload), payload)
 
 
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -203,13 +214,7 @@ FROM agg WHERE lup > ldel
 
 
 def q_cdc_lww_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = derive_change_events(spark, sf_dir)
-    good, _dead = resolve.validate(events, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
-    regs = lww.batch_registers(normalized, CDC_PAYLOAD)
-    return lww.visible(regs, CDC_PAYLOAD)
+    return _lww_state(derive_change_events(spark, sf_dir))
 
 
 def q_cdc_streaming_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -343,16 +348,13 @@ def q_cdc_moves_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     swap/cycle moves (RenameS3UtilsTest.kt:100-274), cross-conversation
     moves (ReorderFilesTest.kt:348-426), pre-batch-state resolution
     (ReorderFiles.kt:150-184) and source-delete suppression."""
-    from ..operators.apply import apply_derived_log
-
     # spread the single-row-group test parquet before the multi-pass apply
     # (the per-batch loop reads the derivation several times; without this
     # every pass scans on ONE task — same rationale as q_docs_minhash_sig)
     events = derive_change_events(spark, sf_dir, include_moves=True).repartition(
         spark.sparkContext.defaultParallelism
     )
-    good, _dead = resolve.validate(events, [])
-    return apply_derived_log(spark, good, CDC_PAYLOAD)
+    return apply_derived_log(spark, events, CDC_PAYLOAD)
 
 
 def q_cdc_moves_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,12 +531,7 @@ def q_cdc_multi_shard_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i, tagged.filter(F.col("_shard") == i).drop("_shard"))
         for i in range(3)
     ]
-    merged = merge_shard_logs(shard_dfs, n_shards=3)
-    good, _dead = resolve.validate(merged, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
-    return lww.visible(lww.batch_registers(normalized, CDC_PAYLOAD), CDC_PAYLOAD)
+    return _lww_state(merge_shard_logs(shard_dfs, n_shards=3))
 
 
 CDC_ID_SYNTHESIS_SQL = f"""
@@ -603,11 +600,7 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "schema_version", F.when(has_extra, F.lit(2)).otherwise(F.lit(1))
     )
-    promoted = list(promoted_columns(2))
-    good, _dead = resolve.validate(events, promoted)
-    pay = CDC_PAYLOAD + promoted
-    normalized = good.select("lsn", "batch_id", "op", "conv_id", "turn_idx", *pay)
-    return lww.visible(lww.batch_registers(normalized, pay), pay)
+    return _lww_state(events, CDC_PAYLOAD + list(promoted_columns(2)))
 
 
 # Event-time windowed aggregation (the streaming metrics shape in batch
@@ -1064,10 +1057,7 @@ def q_conv_document_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves incremental ≡ rebuild. At 10^10 events per-epoch render cost is
     ∝ changed conversations (epoch-sized, broadcast-eligible id joins)."""
     events = derive_change_events(spark, sf_dir)
-    good, _dead = resolve.validate(events, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
+    normalized = _normalized(events)
     old_state = lww.visible(
         lww.batch_registers(
             normalized.filter(F.col("batch_id") != "b04"), CDC_PAYLOAD
@@ -1704,7 +1694,7 @@ def q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multimodal.image_phash — the image analogue of simhash), then
     banded 16-bit equi-joins generate candidates and exact Hamming ≤ 8
     verifies them (multimodal.phash_near_dups) — never an all-pairs
-    comparison. Runs the stub decode (md5 grid) so the ENTIRE
+    comparison. Runs the stub decode (payload prefix as pixels) so the ENTIRE
     mapInPandas → banding → verify pipeline is driver-checked against
     DuckDB bit-for-bit; the real pixel path (PIL / pure-python PNG+BMP
     decode → 8×9 average pool) is pinned on real image bytes in
@@ -3043,13 +3033,7 @@ def q_cdc_debezium_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reference (measured 28 copies in the pushed filter, 9.1 s vs 1.2 s
     # at sf0.1).
     env = debezium.to_debezium(events).localCheckpoint(eager=True)
-    parsed = debezium.parse_debezium(env)
-    good, _dead = resolve.validate(parsed, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
-    regs = lww.batch_registers(normalized, CDC_PAYLOAD)
-    return lww.visible(regs, CDC_PAYLOAD)
+    return _lww_state(debezium.parse_debezium(env))
 
 
 def q_cdc_maxwell_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3072,13 +3056,7 @@ def q_cdc_maxwell_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.sparkContext.defaultParallelism
     )
     env = maxwell.to_maxwell(events).localCheckpoint(eager=True)
-    parsed = maxwell.parse_maxwell(env)
-    good, _dead = resolve.validate(parsed, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
-    regs = lww.batch_registers(normalized, CDC_PAYLOAD)
-    return lww.visible(regs, CDC_PAYLOAD)
+    return _lww_state(maxwell.parse_maxwell(env))
 
 
 # Gap sessionization over the raw events stream. Both engines compute the
@@ -5310,10 +5288,7 @@ def q_cdc_bootstrap_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..table.lake import LakeTable
 
     events = derive_change_events(spark, sf_dir).cache()
-    good, _dead = resolve.validate(events, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
+    normalized = _normalized(events)
     watermark = int(events.agg(F.max("lsn")).first()[0] * 0.6)
 
     tmp = tempfile.mkdtemp(prefix="cdc_bootstrap_")
@@ -5905,10 +5880,7 @@ def q_conv_sig_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-epoch signature cost ∝ changed conversations and re-hashing the
     corpus every epoch."""
     events = derive_change_events(spark, sf_dir)
-    good, _dead = resolve.validate(events, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
+    normalized = _normalized(events)
     old_events = normalized.filter(F.col("batch_id") != "b04")
     old_state = lww.visible(
         lww.batch_registers(old_events, CDC_PAYLOAD), CDC_PAYLOAD
@@ -5936,7 +5908,7 @@ def q_conv_sig_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-key-bucket stream freshness: the dashboard behind the north rule's
 # "per-partition watermark lag" metric, expressed over the DETERMINISTIC
 # key-hash bucket (the logical partition — physical spark_partition_id is
-# not replay-stable, see apply.batch_lineage which covers that side). Lag
+# not replay-stable, see lake._batch_lineage which covers that side). Lag
 # is event-time only (never wall clock) so replays report identical
 # numbers. One map-side-combinable groupBy on a 16-value key, then the
 # 16-row rollup joins the 1-row global watermark — nothing corpus-sized
@@ -6202,13 +6174,7 @@ def q_cdc_txn_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import txn as txn_ops
 
     stream, meta = _txn_stream(spark, sf_dir)
-    gated = txn_ops.complete_txns(stream, meta).drop("txn_id")
-    good, _dead = resolve.validate(gated, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *CDC_PAYLOAD
-    )
-    regs = lww.batch_registers(normalized, CDC_PAYLOAD)
-    return lww.visible(regs, CDC_PAYLOAD)
+    return _lww_state(txn_ops.complete_txns(stream, meta).drop("txn_id"))
 
 
 CDC_TXN_ATOMIC_SQL = f"""

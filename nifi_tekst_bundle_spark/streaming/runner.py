@@ -124,23 +124,20 @@ def batch_move_runs(
 
 def make_apply_fn(table: LakeTable, run_id: str, stats: StreamStats,
                   fail_after: list[int] | None = None,
-                  hot_key_threshold: int | None = None,
-                  coalesce_move_free: bool = True):
+                  hot_key_threshold: int | None = None):
     """foreachBatch body. ``fail_after`` injects a crash after N producer
     batches applied (failure-injection tests — ReorderFilesTest.kt:319-345).
     ``hot_key_threshold`` enables per-batch hot-key detection + salted
     two-phase aggregation in the merge (see LakeTable.merge_batch).
-    ``coalesce_move_free`` merges consecutive move-free producer batches
-    into one fenced commit (see plan_runs); the grouping is a pure function
-    of the epoch's data, so a crash-restart re-derives identical fences."""
+    Consecutive move-free producer batches merge into one fenced commit
+    (see plan_runs); the grouping is a pure function of the epoch's data,
+    so a crash-restart re-derives identical fences."""
 
     def apply_epoch(epoch_df: DataFrame, epoch_id: int) -> None:
         stats.epochs_seen += 1
         epoch_df = epoch_df.persist()
         try:
             runs, _has_move = batch_move_runs(epoch_df)
-            if not coalesce_move_free:
-                runs = [[bid] for run in runs for bid in run]
             committed = set(table.manifest().committed)
             pref = f"{run_id}/e{epoch_id}/"
 
@@ -163,10 +160,9 @@ def make_apply_fn(table: LakeTable, run_id: str, stats: StreamStats,
             for run in runs:
                 if len(run) > 1:
                     # upgrade path: an epoch whose batches were committed
-                    # under per-batch fences (older layout, or coalescing
-                    # toggled) must not re-apply as a coalesced run — that
-                    # would append its dead letters and lineage a second
-                    # time. PARTIAL per-batch coverage (a pre-coalescing
+                    # under per-batch fences (older layout) must not
+                    # re-apply as a coalesced run — that would append its
+                    # dead letters and lineage a second time. PARTIAL per-batch coverage (a pre-coalescing
                     # run crashed mid-epoch) falls back to per-batch
                     # application of only the uncommitted batches: a
                     # coalesced fence over the whole run would re-append
@@ -214,7 +210,6 @@ def start_continuous(
     max_files_per_trigger: int = 1,
     fail_after: list[int] | None = None,
     hot_key_threshold: int | None = None,
-    coalesce_move_free: bool = True,
     source_format: str = "parquet",
 ):
     """Long-running production mode: a ProcessingTime trigger that keeps
@@ -233,8 +228,7 @@ def start_continuous(
     src = _source(spark, events_dir, max_files_per_trigger, source_format)
     q = (
         src.writeStream.foreachBatch(
-            make_apply_fn(table, run_id, stats, fail_after, hot_key_threshold,
-                          coalesce_move_free)
+            make_apply_fn(table, run_id, stats, fail_after, hot_key_threshold)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=processing_time)
@@ -283,7 +277,6 @@ def run_to_completion(
     max_files_per_trigger: int = 1,
     fail_after: list[int] | None = None,
     hot_key_threshold: int | None = None,
-    coalesce_move_free: bool = True,
     source_format: str = "parquet",
 ) -> StreamStats:
     """Consume everything currently in events_dir (Trigger.AvailableNow),
@@ -293,8 +286,7 @@ def run_to_completion(
     src = _source(spark, events_dir, max_files_per_trigger, source_format)
     q = (
         src.writeStream.foreachBatch(
-            make_apply_fn(table, run_id, stats, fail_after, hot_key_threshold,
-                          coalesce_move_free)
+            make_apply_fn(table, run_id, stats, fail_after, hot_key_threshold)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

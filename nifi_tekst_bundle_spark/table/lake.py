@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import PAYLOAD_COLUMNS, promoted_columns
 from ..operators import lww, resolve
-from ..operators.apply import batch_lineage
+from ..operators.apply import resolve_batch
 
 BUCKET_COL = "_bucket"
 
@@ -59,9 +59,35 @@ class ConcurrentCommitError(RuntimeError):
     concurrency, Iceberg-style): re-read HEAD, re-resolve, retry."""
 
 
-def bucket_expr(n_buckets: int) -> F.Column:
+def bucket_expr(n_buckets: int, key: str = "conv_id") -> F.Column:
     # xxhash64 is deterministic (fixed seed 42) across sessions/executors
-    return F.pmod(F.xxhash64(F.col("conv_id")), F.lit(n_buckets)).cast("int")
+    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+
+
+def _batch_lineage(normalized: DataFrame, n_buckets: int) -> DataFrame:
+    """Per-partition lineage counts + event-time bounds for the metrics
+    table (the grown-up version of the ReorderFiles result summary,
+    ReorderFiles.kt:396-406), plus each partition's set of key buckets.
+
+    min_ts/max_ts bound each partition's event time; the caller derives the
+    epoch watermark (max over partitions) and per-partition watermark lag
+    (watermark − min_ts) from them. Event-time based, never wall-clock, so
+    replays report identical metrics (SURVEY.md §4 determinism rule).
+    """
+    ts = F.col("ts") if "ts" in normalized.columns else F.lit(None).cast("timestamp")
+    is_del = F.col("op") == "delete"
+    return (
+        normalized.withColumn("partition_id", F.spark_partition_id())
+        .groupBy("partition_id")
+        .agg(
+            F.count("*").alias("events_applied"),
+            F.sum(F.when(~is_del, 1).otherwise(0)).alias("upserts"),
+            F.sum(F.when(is_del, 1).otherwise(0)).alias("deletes"),
+            F.min(ts).alias("min_ts"),
+            F.max(ts).alias("max_ts"),
+            F.collect_set(bucket_expr(n_buckets)).alias("buckets"),
+        )
+    )
 
 
 @dataclass
@@ -551,10 +577,16 @@ class LakeTable:
                     f"prune columns {sorted(bad)} have no recorded stats; "
                     f"supported: {list(self.STATS_COLS)}"
                 )
-        regs = self._read_registers_of(
-            spark, m, payload_override=payload, prune=prune
-        )
         reg_level = {"_lsn_up", "_lsn_del"}
+        # a row-level prune column left out of ``cols`` is still read for
+        # the filter, then dropped before returning
+        hidden = [
+            c for c in (prune or {})
+            if c not in reg_level and c not in lww.KEY and c not in payload
+        ]
+        regs = self._read_registers_of(
+            spark, m, payload_override=payload + hidden, prune=prune
+        )
         if prune:
             for c, (lo, hi) in prune.items():
                 if c not in reg_level:
@@ -563,7 +595,7 @@ class LakeTable:
                     regs = regs.filter(F.col(c) >= F.lit(lo))
                 if hi is not None:
                     regs = regs.filter(F.col(c) <= F.lit(hi))
-        vis = lww.visible(regs, payload)
+        vis = lww.visible(regs, payload + hidden)
         if prune:
             for c, (lo, hi) in prune.items():
                 if c in reg_level:
@@ -572,7 +604,7 @@ class LakeTable:
                     vis = vis.filter(F.col(c) >= F.lit(lo))
                 if hi is not None:
                     vis = vis.filter(F.col(c) <= F.lit(hi))
-        return vis
+        return vis.drop(*hidden)
 
     def lookup(self, spark: SparkSession, conv_id: str) -> DataFrame:
         """Point read: the visible turns of ONE conversation, scanning only
@@ -846,56 +878,39 @@ class LakeTable:
             return False
         n_buckets = m.n_buckets
         attempt = uuid.uuid4().hex[:12]
+        lsn_wm = int(getattr(m, "lsn_watermark", 0) or 0)
+
+        # ONE aggregate over the raw batch answers what the resolve plan
+        # needs to know up front: the schema version to promote to, and the
+        # buckets that can hold a valid move's source (empty = move-free).
+        # reject_reason reads no payload column, so the valid moves are
+        # known before promotion.
+        valid_move = (
+            (F.col("op") == "move")
+            & resolve.reject_reason().isNull()
+            & (F.col("lsn") >= lsn_wm)
+        )
+        probe = events.agg(
+            F.max("schema_version"),
+            F.collect_set(F.when(valid_move, bucket_expr(n_buckets, "src_conv_id"))),
+        ).first()
+        src_buckets = set(probe[1])
+        has_moves = bool(src_buckets)
 
         # additive schema evolution: promote columns demanded by the batch
-        max_sv_row = events.agg(F.max("schema_version")).first()
-        max_sv = max_sv_row[0] if max_sv_row and max_sv_row[0] else 1
         payload_cols = list(m.payload_cols)
-        for c in promoted_columns(int(max_sv)):
+        for c in promoted_columns(int(probe[0] or 1)):
             if c not in payload_cols:
                 payload_cols.append(c)
 
-        promoted = [c for c in payload_cols if c not in PAYLOAD_COLUMNS]
-        good, dead1 = resolve.validate(events, promoted)
-        # Compaction replay floor: once compact_tombstones(w) dropped
-        # tombstones below w, replaying an event with lsn < w could
-        # resurrect a compacted delete (the register algebra's idempotence
-        # argument needs the tombstone present). Such events can only come
-        # from a replay outside the fence window (e.g. a fresh checkpoint
-        # over an already-applied log) — dead-letter them loudly instead of
-        # corrupting state.
-        lsn_wm = int(getattr(m, "lsn_watermark", 0) or 0)
-        if lsn_wm > 0:
-            stale = good.filter(F.col("lsn") < lsn_wm).withColumn(
-                "reason", F.lit("stale_lsn_below_compaction_watermark")
-            )
-            dead1 = dead1.unionByName(stale, allowMissingColumns=True)
-            good = good.filter(F.col("lsn") >= lsn_wm)
-        good = good.persist()
-
-        # move-source resolution against pre-batch visible state — prune to
-        # the buckets that can contain sources (CDC "read table to resolve")
-        has_moves = good.filter(F.col("op") == "move").limit(1).count() > 0
-        if has_moves:
-            src_buckets = {
-                r[0]
-                for r in good.filter(F.col("op") == "move")
-                .select(
-                    F.pmod(F.xxhash64(F.col("src_conv_id")), F.lit(n_buckets))
-                    .cast("int")
-                    .alias("b")
-                )
-                .distinct()
-                .collect()
-            }
-            pre_visible = lww.visible(
-                self.read_registers(spark, buckets=src_buckets), payload_cols
-            )
-        else:
-            pre_visible = lww.visible(
-                self.read_registers(spark, buckets=set()), payload_cols
-            )
-        normalized, dead2 = resolve.expand_moves(good, pre_visible, payload_cols)
+        # move sources resolve against the pre-batch visible state, pruned
+        # to the buckets that can contain them (CDC "read table to resolve")
+        pre_visible = (
+            lww.visible(self.read_registers(spark, buckets=src_buckets), payload_cols)
+            if has_moves
+            else None
+        )
+        normalized, dead = resolve_batch(events, payload_cols, pre_visible, lsn_wm)
         normalized = normalized.persist()
 
         salted = False
@@ -908,17 +923,14 @@ class LakeTable:
             )
             salted = bool(row and row[0] and row[0] > hot_key_threshold)
         if salted:
-            bregs = lww.salted_batch_registers(
-                normalized, payload_cols, n_salts=n_salts
-            ).persist()
+            bregs = lww.salted_batch_registers(normalized, payload_cols, n_salts=n_salts)
         else:
-            bregs = lww.batch_registers(normalized, payload_cols).persist()
-        touched = {
-            r[0]
-            for r in bregs.select(bucket_expr(n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        }
+            bregs = lww.batch_registers(normalized, payload_cols)
+        # ONE aggregate over the persisted normalized batch: lineage per
+        # partition, and the touched buckets (bregs is keyed on exactly the
+        # keys of normalized, so its buckets are the batch's buckets)
+        lin_rows = _batch_lineage(normalized, n_buckets).collect()
+        touched = {b for r in lin_rows for b in r["buckets"]}
         state = self.read_registers(spark, buckets=touched)
         # Full-outer joins cannot broadcast a side; the join is still
         # bucket-pruned (touched buckets only) and AQE right-sizes it.
@@ -930,7 +942,6 @@ class LakeTable:
         # lineage metrics (the ReorderFiles result summary, grown to a table);
         # watermark = epoch max event-time, lag = watermark − partition min
         # event-time — event-time based so replay reproduces metrics exactly
-        lin_rows = batch_lineage(normalized).collect()
         wm = max(
             (r["max_ts"] for r in lin_rows if r["max_ts"] is not None),
             default=None,
@@ -953,23 +964,7 @@ class LakeTable:
             }
             for r in lin_rows
         ]
-        # detail: the raw wire payload for unparseable envelopes (set by
-        # sources.debezium under extra['_raw']) — keeps dead letters
-        # debuggable and keeps DISTINCT corrupt lines distinct through the
-        # (fence_key, lsn, detail) read-path dedupe (they all share a NULL
-        # lsn, so without it they'd collapse to one row)
-        detail1 = (
-            F.try_element_at(F.col("extra"), F.lit("_raw"))
-            if "extra" in dead1.columns
-            else F.lit(None).cast("string")
-        )
-        dead = dead1.select(
-            "lsn", "batch_id", "op", "reason", detail1.alias("detail")
-        ).unionByName(
-            dead2.select("lsn", "batch_id", "op", "reason").withColumn(
-                "detail", F.lit(None).cast("string")
-            )
-        ).persist()  # one derivation feeds both the count and the write
+        dead = dead.persist()  # one derivation feeds both the count and the write
         dl_count = dead.count()
         dl_path = os.path.join(self.dl_dir, f"att-{attempt}")
         if dl_count:
@@ -1057,9 +1052,7 @@ class LakeTable:
             shutil.rmtree(dl_path, ignore_errors=True)
             raise
         finally:
-            good.unpersist()
             normalized.unpersist()
-            bregs.unpersist()
         return True
 
     # ---------- maintenance / introspection ----------

@@ -230,8 +230,8 @@ def test_phantom_lineage_rows_filtered(spark, tmp_path):
         epoch_id=0,
     )
     # simulate a crash AFTER the side-table append but BEFORE the manifest
-    # swap, where the retry re-derived different fences (coalescing
-    # toggled): rows exist for a fence the manifest never committed
+    # swap, where the retry re-derived different fences (an older fence
+    # layout): rows exist for a fence the manifest never committed
     table._append_lineage(
         [
             {
@@ -256,7 +256,7 @@ def test_phantom_lineage_rows_filtered(spark, tmp_path):
 
 def test_partial_per_batch_fences_fall_back_to_per_batch(spark, tmp_path):
     """An epoch whose first batch committed under a per-batch fence (older
-    layout, or coalescing previously off) must apply only the remaining
+    layout) must apply only the remaining
     batches — per-batch — instead of re-applying the whole run under a
     coalesced fence (which would double-append lineage/dead letters for the
     already-committed batch)."""

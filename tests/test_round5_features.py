@@ -101,6 +101,22 @@ def test_ts_range_scan_accepts_datetime_bounds(spark, stats_table):
     )
 
 
+def test_ts_range_scan_with_column_subset(spark, stats_table):
+    """A row-level prune column outside ``cols`` is read for the filter and
+    not returned."""
+    t = stats_table
+    lo = dt.datetime(2026, 1, 1, 0, 30)
+    hi = dt.datetime(2026, 1, 1, 1, 0)
+    pruned = t.visible(spark, cols=["text"], prune={"ts": (lo, hi)})
+    assert pruned.columns == ["conv_id", "turn_idx", "text"]
+    full = t.visible(spark).filter(
+        (F.col("ts") >= F.lit(lo)) & (F.col("ts") <= F.lit(hi))
+    )
+    assert sorted(map(tuple, pruned.collect())) == sorted(
+        map(tuple, full.select(*pruned.columns).collect())
+    )
+
+
 def test_prune_keeps_statless_files():
     """Legacy file entries (pre-stats commits) and all-null columns carry
     no stats entry — they must always be read (sound, never fast-wrong)."""
@@ -231,6 +247,15 @@ def test_image_phash_real_decode_png_bmp(spark):
     assert (0, 1) in pairs and pairs[(0, 1)] == 0
     assert (0, 2) in pairs and 0 < pairs[(0, 2)] <= 12
     assert not any(3 in p for p in pairs)
+
+
+@pytest.mark.parametrize("n_bands", [0, 3, 5, 7])
+def test_phash_near_dups_rejects_bands_not_dividing_64(spark, n_bands):
+    from nifi_tekst_bundle_spark.operators import multimodal
+
+    sig = spark.createDataFrame([(0, "0" * 64)], "media_id long, phash_bits string")
+    with pytest.raises(ValueError, match="divide 64"):
+        multimodal.phash_near_dups(sig, n_bands=n_bands)
 
 
 def test_image_phash_unrecognized_bytes_raise(spark):
