@@ -1,24 +1,34 @@
-"""Benchmark harness.
+"""Benchmark harness: the headline catalog queries and the CDC apply
+scaling sweep, each measured in this run under a trial count fixed in
+advance.
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total headline seconds>, "unit": "sec",
    "queries": {...per-query seconds...}, "sf": ...,
    "cdc_events_per_sec": ..., "scaling": {...}}
 
-Also measures the north-rule scaling evidence — the same CDC apply job at
-two parallelism levels (local[N] and local[4N]) on the same input — and
-writes BENCH/BASELINE.md with both throughputs and the scaling efficiency.
+The scaling sweep times scan -> validate -> LWW registers -> `noop` sink
+over a replicated change log at local[N] and local[4N]: no bucket merge,
+file write or fenced commit. `perfbench/` measures the commit path
+(source parse through manifest CAS). A run with the sweep rewrites
+BENCH/BASELINE.md with this run's numbers.
 
 Env:
   SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    (default 32)
-  BENCH_SKIP_SCALING=1 to skip the two-parallelism run
+  SPARK_DRIVER_MEM    (default 48g)
+  BENCH_CDC_MULTIPLIER (default 1600) change-log replication factor
+  BENCH_SCALING_ROUNDS / BENCH_SCALING_RUNS / BENCH_SCALING_RUNS_SUPP
+                      (default 3 / 6 / 2) the trial protocol, see run_scaling
+  BENCH_SCALING_PARTITIONS (default 64)
+  BENCH_SKIP_SCALING=1 to skip the sweep; BENCH/BASELINE.md is left alone
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 from pathlib import Path
@@ -173,28 +183,18 @@ def amplified_events(spark: SparkSession, sf_dir: str, multiplier: int,
     return amp
 
 
-def cdc_apply_job(spark: SparkSession, sf_dir: str, multiplier: int) -> tuple[float, int]:
-    events = amplified_events(spark, sf_dir, multiplier)
-    n_events = events.count()  # warm the scan; count separately from apply
-    t0 = time.time()
-    good, _dead = resolve.validate(events, [])
-    normalized = good.select(
-        "lsn", "batch_id", "op", "conv_id", "turn_idx", *catalog.CDC_PAYLOAD
-    )
-    regs = lww.batch_registers(normalized, catalog.CDC_PAYLOAD)
-    final = lww.visible(regs, catalog.CDC_PAYLOAD)
-    force(final)
-    return time.time() - t0, n_events
-
-
 def materialize_events(sf_dir: str, multiplier: int) -> str:
-    """Write the amplified change log to parquet once — scaling trials then
-    measure the pure apply (scan -> validate -> LWW registers -> visible),
-    i.e. the binlog-tail read path, not row generation."""
+    """Write the amplified change log to parquet once per (sf, multiplier),
+    so scaling trials time the apply (scan -> validate -> LWW registers ->
+    visible), not row generation. A copy is reused only when Spark's
+    `_SUCCESS` marker shows that its write finished."""
     import tempfile
 
-    out = os.path.join(tempfile.gettempdir(), f"bench_events_x{multiplier}")
-    if not os.path.exists(out):
+    out = os.path.join(
+        tempfile.gettempdir(),
+        f"bench_events_{Path(sf_dir).name}_x{multiplier}",
+    )
+    if not os.path.exists(os.path.join(out, "_SUCCESS")):
         spark = make_spark(CPUS)
         try:
             amplified_events(spark, sf_dir, multiplier).write.mode(
@@ -220,113 +220,57 @@ def apply_from_disk(spark: SparkSession, ev_dir: str) -> float:
 def run_scaling(sf_dir: str, cpus: int) -> dict:
     """North-rule evidence: the same CDC apply job at N and 4N cores.
 
-    This sandbox is a shared VM with heavy CPU-steal variance, so trials
-    are interleaved across core counts and the MIN per config is reported
-    (min is robust to steal; mean is not). Two N->4N pairs are measured,
-    plus a raw-CPU calibration (multiprocessing sha256) that shows how much
-    4x parallelism the VM can physically deliver at each pair.
+    The trial count is fixed before the first trial. BENCH_SCALING_ROUNDS
+    interleaved rounds pass over the configs; in each round every config
+    gets one Spark session, one untimed warm-up apply (JIT, codegen,
+    parquet footers, page cache), BENCH_SCALING_RUNS timed applies
+    (BENCH_SCALING_RUNS_SUPP for the supplementary pair's configs) and one
+    raw-CPU probe (run_pool) in the same load window. Each config reports
+    the min and the median of its trials; each pair reports its efficiency
+    from both, next to the raw-CPU ceiling from the probes.
     """
     ev_dir = materialize_events(sf_dir, CDC_MULTIPLIER)
-    n_events = None
-    # BOTH N→4N pairs are measured and reported so the pair selection is
-    # auditable. 4→16 is the PRIMARY criterion pair: a raw-CPU sha256
-    # sweep shows this host only physically delivers ~2.35× (eff 0.59)
-    # from 8→32 threads despite lscpu reporting 32 dedicated cores — the
-    # host is overcommitted at high thread counts — while 4→16 delivers
-    # 3.2× (eff 0.80). 8→32 is still published (with its same-window
-    # raw-CPU ceiling) as supplementary evidence; on that pair the
-    # efficiency number measures the hypervisor, not the engine.
-    # clamp to the host's CPU count (an N→4N pair must never run more
-    # threads than exist — that measures oversubscription, not scaling)
-    # and dedupe (at CPUS=8 both formulas give (2,8))
+    # Two N→4N pairs, both reported: the first is the primary criterion
+    # pair, the second (up to all host cores) is supplementary, because on
+    # an overcommitted host its efficiency measures the hypervisor — read
+    # it against its own same-window raw-CPU ceiling. Pairs are clamped to
+    # the host's CPU count (more threads than cores measures
+    # oversubscription) and deduped (at CPUS=8 both give (2, 8)).
     raw_pairs = [
         (max(cpus // 8, 2), min(max(cpus // 2, 8), cpus)),
         (max(cpus // 4, 2), cpus),
     ]
     pairs = list(dict.fromkeys(p for p in raw_pairs if p[0] < p[1]))
     cores_list = sorted({c for p in pairs for c in p})
+    rounds = int(os.environ.get("BENCH_SCALING_ROUNDS", "3"))
+    runs = int(os.environ.get("BENCH_SCALING_RUNS", "6"))
+    runs_supp = int(os.environ.get("BENCH_SCALING_RUNS_SUPP", "2"))
+    # both configs of a pair get the same number of trials, so neither side
+    # of its ratio gets more chances at a quiet window than the other
+    primary_cores = set(pairs[0]) if pairs else set()
+    runs_of = {c: runs if c in primary_cores else runs_supp for c in cores_list}
     times: dict[int, list] = {c: [] for c in cores_list}
     cpu_times: dict[int, list] = {c: [] for c in cores_list}
-    # Trial layout: ROUNDS interleaved passes over the configs; within a
-    # round each config gets ONE session (one untimed warmup pays the
-    # JIT/codegen/footer/page-cache cost per JVM) and RUNS timed applies.
-    # Min-of-all-trials is the statistic — this host's CPU steal only ever
-    # ADDS time, so more draws per wall-clock minute move each config's
-    # min toward its quiet-window truth, which is what the N→4N ratio
-    # needs (a single stolen 16-core trial deflates efficiency ~10 pts).
-    # 3 rounds × 4 runs = 12 trials/config: extra timed runs inside an
-    # already-warm session cost one apply each (~25 s) while extra rounds
-    # would pay a warmup per config — more draws per wall-clock minute.
-    # Draw counts are SYMMETRIC WITHIN EACH PAIR on purpose: E[min] falls
-    # with draw count under one-sided (steal) noise, so giving one SIDE of
-    # a pair extra draws would bias that pair's N→4N ratio. Across pairs
-    # there is no shared ratio to bias, so the primary pair's two configs
-    # both get more draws (runs_per_session) than the supplementary
-    # pair's (runs_supplementary) — see below.
-    rounds = int(os.environ.get("BENCH_SCALING_ROUNDS", "3"))
-    runs_per_session = int(os.environ.get("BENCH_SCALING_RUNS", "6"))
-    runs_supplementary = int(os.environ.get("BENCH_SCALING_RUNS_SUPP", "2"))
-    # Adaptive sampling: steal noise is ONE-SIDED (it only ever inflates a
-    # trial), so the min over more draws monotonically approaches each
-    # config's quiet-window truth — extra rounds can never fabricate
-    # speedup, they only remove noise. If the primary pair's efficiency is
-    # still below the criterion after the base rounds, keep sampling the
-    # PRIMARY pair (both configs, symmetric draws) up to
-    # BENCH_SCALING_MAX_EXTRA additional rounds or until it clears.
-    target_eff = float(os.environ.get("BENCH_SCALING_TARGET", "0.8"))
-    max_extra = int(os.environ.get("BENCH_SCALING_MAX_EXTRA", "5"))
-    # The PRIMARY pair is the criterion: give BOTH of its configs more
-    # timed draws (6 vs 2) so each min gets closer to the quiet-window
-    # truth — symmetry stays per-PAIR, which is what the N→4N ratio needs
-    # (asymmetric draws within a pair would bias its ratio; across pairs
-    # there is no shared ratio to bias). The supplementary pair keeps
-    # enough draws to stay honest without doubling wall-clock.
-    primary_cores = set(pairs[0]) if pairs else set()
+    n_events = None
     for _ in range(rounds):
         for c in cores_list:
             spark = make_spark(c, parts=SCALING_PARTITIONS)
             try:
                 if n_events is None:
                     n_events = spark.read.parquet(ev_dir).count()
-                # full untimed warmup apply: first execution per JVM pays
-                # JIT + codegen + parquet-footer + page-cache costs that
-                # have nothing to do with core-count scaling
-                apply_from_disk(spark, ev_dir)
-                n_runs = (
-                    runs_per_session if c in primary_cores
-                    else runs_supplementary
-                )
-                for _r in range(n_runs):
-                    times[c].append(apply_from_disk(spark, ev_dir))
-            finally:
-                spark.stop()
-            # raw-CPU probe in the SAME load window as the Spark trial —
-            # the hypervisor's steal varies minute to minute, so ceiling
-            # and engine must be sampled together to be comparable
-            cpu_times[c].append(run_pool(c))
-
-    def _primary_eff() -> float:
-        lo, hi = pairs[0]
-        return (min(times[lo]) / min(times[hi])) / (hi / lo)
-
-    extra = 0
-    while pairs and _primary_eff() < target_eff and extra < max_extra:
-        extra += 1
-        for c in pairs[0]:
-            spark = make_spark(c, parts=SCALING_PARTITIONS)
-            try:
-                apply_from_disk(spark, ev_dir)  # untimed warmup
-                for _r in range(runs_per_session):
+                apply_from_disk(spark, ev_dir)  # untimed warm-up
+                for _r in range(runs_of[c]):
                     times[c].append(apply_from_disk(spark, ev_dir))
             finally:
                 spark.stop()
             cpu_times[c].append(run_pool(c))
     best = {c: min(ts) for c, ts in times.items()}
+    med = {c: statistics.median(ts) for c, ts in times.items()}
     cpu_best = {c: min(ts) for c, ts in cpu_times.items()}
     out: dict = {
         "events": n_events,
+        "protocol": {"rounds": rounds, "runs": runs, "runs_supplementary": runs_supp},
         "trials": {str(c): len(times[c]) for c in cores_list},
-        "adaptive_extra_rounds": extra,
         "configs": {},
     }
     for c in cores_list:
@@ -334,6 +278,7 @@ def run_scaling(sf_dir: str, cpus: int) -> dict:
             "cores": c,
             "trials": len(times[c]),
             "seconds": round(best[c], 3),
+            "median_seconds": round(med[c], 3),
             "events_per_sec": round(n_events / best[c], 1),
         }
     out["pairs"] = []
@@ -347,10 +292,8 @@ def run_scaling(sf_dir: str, cpus: int) -> dict:
                 "primary": i == 0,
                 "speedup": round(best[lo] / best[hi], 2),
                 "efficiency": round(eff, 3),
+                "median_efficiency": round((med[lo] / med[hi]) / (hi / lo), 3),
                 "cpu_ceiling": round(cpu_eff, 3),
-                # engine efficiency normalized to what the shared host
-                # physically delivered in the same windows: the
-                # hypervisor-independent number
                 "efficiency_vs_ceiling": round(eff / cpu_eff, 3),
             }
         )
@@ -369,7 +312,7 @@ def _burn(n):
 def run_pool(p: int) -> float:
     """Pure-CPU probe (sha256 over a multiprocessing pool, no JVM): how
     fast p-way parallelism runs on this host right now. The N vs 4N ratio
-    of these is the physical ceiling the shared VM allows in that window."""
+    of these is the physical ceiling the host allows in that window."""
     import multiprocessing
 
     t0 = time.time()
@@ -378,108 +321,11 @@ def run_pool(p: int) -> float:
     return time.time() - t0
 
 
-def merge_query_minima(queries: dict) -> None:
-    """Query-only baseline refresh (BENCH_SKIP_SCALING=1 path): update the
-    per-query minima table in place, leaving the committed scaling section
-    — a single-window artifact — untouched. New queries append; existing
-    rows take min(old, new).
-
-    Rows are parsed ONLY from the text after the `| query | seconds |`
-    header (not from anywhere in the file — the scaling tables are also
-    two-column-ish), and any content after the query table (a non-row
-    line ends it) is re-appended unchanged."""
-    import re as _re
-
-    baseline_path = REPO / "BENCH" / "BASELINE.md"
-    if not baseline_path.exists():
-        return
-    text = baseline_path.read_text()
-    head, sep, tail = text.partition("| query | seconds |\n|---|---|\n")
-    if not sep:
-        return
-    prior: dict[str, float] = {}
-    tail_lines = tail.splitlines(keepends=True)
-    n_rows = 0
-    for line in tail_lines:
-        m = _re.match(r"\| (\w+) \| ([\d.]+) \|$", line.rstrip("\n"))
-        if not m:
-            break  # first non-row line ends the table
-        prior[m.group(1)] = float(m.group(2))
-        n_rows += 1
-    trailing = "".join(tail_lines[n_rows:])
-    merged = dict(prior)
-    for k, v in queries.items():
-        merged[k] = min(v, merged.get(k, v))
-    rows = "".join(f"| {k} | {v} |\n" for k, v in merged.items())
-    baseline_path.write_text(head + sep + rows + trailing)
-
-
-def _sweep_primary_eff(s: dict) -> float:
-    for p in s.get("pairs", []):
-        if p.get("primary"):
-            return float(p.get("efficiency", 0.0))
-    return 0.0
-
-
-def _best_scaling_sweep(scaling: dict) -> tuple[dict, bool]:
-    """Select the best committed scaling sweep (by PRIMARY-pair raw
-    efficiency) between this run and the sidecar `BENCH/scaling_best.json`,
-    and persist the winner. The per-query table already keeps cross-sweep
-    minima; the scaling table gets the same best-committed treatment
-    (VERDICT r4 #2) — each sweep is internally one load window (ratios
-    stay meaningful), and the file keeps the best window instead of being
-    overwritten by whichever window the latest run landed in. Returns
-    (best_sweep, is_current_run)."""
-    sidecar = REPO / "BENCH" / "scaling_best.json"
-    _primary = _sweep_primary_eff
-    prior = None
-    if sidecar.exists():
-        try:
-            prior = json.loads(sidecar.read_text())
-        except (ValueError, OSError):
-            prior = None
-    if prior is not None and _primary(prior) > _primary(scaling):
-        best, is_current = prior, False
-    else:
-        best, is_current = scaling, True
-    sidecar.write_text(json.dumps(best, indent=1, sort_keys=True))
-    return best, is_current
-
-
 def write_baseline_md(scaling: dict, queries: dict, sf_dir: str) -> None:
-    import re as _re
-
+    """Render this run's sweep and query times to BENCH/BASELINE.md as
+    given; nothing is carried over from an earlier run."""
     os.makedirs(REPO / "BENCH", exist_ok=True)
-    baseline_path = REPO / "BENCH" / "BASELINE.md"
-    # prior committed values, for the cross-window statistics below:
-    # per-query minima (tail-scoped parse) and best-observed top-core
-    # throughput. The scaling section shows the best committed sweep
-    # (one internally-consistent load window), selected via the sidecar.
-    prior: dict[str, float] = {}
-    prior_best_eps = 0.0
-    if baseline_path.exists():
-        text = baseline_path.read_text()
-        _h, sep, tail = text.partition("| query | seconds |\n|---|---|\n")
-        if sep:
-            for line in tail.splitlines():
-                m = _re.match(r"\| (\w+) \| ([\d.]+) \|$", line)
-                if not m:
-                    break
-                prior[m.group(1)] = float(m.group(2))
-        for line in text.splitlines():
-            b = _re.search(
-                r"observed top-core throughput across committed sweeps is "
-                r"([\d][\d,.]*) events/s",
-                line,
-            )
-            if b:
-                prior_best_eps = float(b.group(1).replace(",", ""))
-    latest = scaling
-    scaling, is_current = _best_scaling_sweep(scaling)
-    top = max(scaling["configs"].values(), key=lambda c: c["cores"])
-    latest_top = max(latest["configs"].values(), key=lambda c: c["cores"])
-    best_eps = max(prior_best_eps, top["events_per_sec"],
-                   latest_top["events_per_sec"])
+    proto = scaling["protocol"]
     lines = [
         "# BENCH/BASELINE.md — measured engine throughput + scaling evidence",
         "",
@@ -487,84 +333,61 @@ def write_baseline_md(scaling: dict, queries: dict, sf_dir: str) -> None:
         f"replicated x{CDC_MULTIPLIER} with unique lsns (same key space),",
         f"pre-materialized to parquet: **{scaling['events']:,} events**.",
         "Job: scan -> validate -> LWW registers -> visible state, fully",
-        "materialized via the noop sink. Every config runs the identical",
-        f"logical plan ({SCALING_PARTITIONS} shuffle partitions, AQE on); each",
-        "session does one full untimed warmup apply (JIT/codegen/page-cache),",
-        "then timed trials. This sandbox is a shared VM with CPU-steal",
-        "variance, so each config reports the MIN of its interleaved trials",
-        f"(per-config draw counts: {scaling['trials']}; the primary pair's",
-        "configs get more draws — draw counts stay symmetric WITHIN each",
-        "pair, which is what its N→4N ratio needs).",
+        "materialized via the noop sink, with no fenced commit (`perfbench/`",
+        "measures the commit path). Every config runs the identical logical",
+        f"plan ({SCALING_PARTITIONS} shuffle partitions, AQE on).",
         "",
-        "## North-rule scaling criterion (sandbox evidence)",
+        "Protocol, fixed before the first trial: rounds interleaved across",
+        "configs; in each round every config gets one session, one untimed",
+        "warm-up apply, its timed applies and one raw-CPU probe. Rounds:",
+        f"{proto['rounds']}; timed applies per round: {proto['runs']}"
+        f" ({proto['runs_supplementary']} for the supplementary pair's configs).",
+        f"Trials per config: {scaling['trials']}.",
+        "Every number below is from this one run.",
         "",
-        "| cores | seconds (min) | events/sec |",
-        "|---|---|---|",
+        "## North-rule scaling criterion",
+        "",
+        "| cores | trials | seconds (min) | seconds (median) | events/sec (min) |",
+        "|---|---|---|---|---|",
     ]
-    for c, cfg in sorted(scaling["configs"].items(), key=lambda kv: int(kv[0])):
+    for _c, cfg in sorted(scaling["configs"].items(), key=lambda kv: int(kv[0])):
         lines.append(
-            f"| local[{cfg['cores']}] | {cfg['seconds']} | {cfg['events_per_sec']:,} |"
+            f"| local[{cfg['cores']}] | {cfg['trials']} | {cfg['seconds']} |"
+            f" {cfg['median_seconds']} | {cfg['events_per_sec']:,} |"
         )
     lines += [
         "",
-        "| pair | Spark speedup | Spark efficiency | raw-CPU ceiling (same windows) | efficiency vs ceiling |",
-        "|---|---|---|---|---|",
+        "| pair | speedup (min) | efficiency (min) | efficiency (median) |"
+        " raw-CPU ceiling (same windows) | efficiency (min) vs ceiling |",
+        "|---|---|---|---|---|---|",
     ]
     for p in scaling["pairs"]:
-        tag = " (primary)" if p.get("primary") else " (supplementary)"
+        tag = "primary" if p["primary"] else "supplementary"
         lines.append(
-            f"| {p['n']}→{p['4n']} cores (4×){tag} | {p['speedup']}× | **{p['efficiency']}** |"
-            f" {p.get('cpu_ceiling', 'n/a')} | **{p.get('efficiency_vs_ceiling', 'n/a')}** |"
+            f"| {p['n']}→{p['4n']} cores ({tag}) | {p['speedup']}× |"
+            f" **{p['efficiency']}** | **{p['median_efficiency']}** |"
+            f" {p['cpu_ceiling']} | {p['efficiency_vs_ceiling']} |"
         )
     lines += [
         "",
         "Criterion: ≥ 0.8 between N and 4N executors. The raw-CPU ceiling is",
-        "a no-JVM multiprocessing sha256 probe run in the SAME load windows",
-        "as the Spark trials: how much 4× parallelism this shared, variably",
-        "loaded VM physically delivered while we measured. The last column",
-        "(engine efficiency ÷ ceiling) is the hypervisor-independent number;",
-        "across repeated runs the raw Spark efficiency tracks whatever the",
-        "host gave that run (observed 0.71–1.02) while efficiency-vs-ceiling",
-        "stays ≥ 0.9.",
-        "",
-        "Both N→4N pairs are published so the pair choice is auditable:",
-        "4→16 is the primary criterion pair because the raw-CPU probe shows",
-        "the host overcommitted above ~16 threads (8→32 delivers well under",
-        "4× even for pure-CPU sha256 with no JVM involved — on that pair the",
-        "efficiency number measures the hypervisor, not the engine; compare",
-        "its Spark efficiency against its own same-window ceiling column).",
-        "",
-        "The throughput and pair tables above come from ONE sweep — the",
-        "BEST committed sweep by primary-pair raw efficiency (each sweep is",
-        "internally one load window, so its ratios are meaningful; the best",
-        "window is kept across runs via BENCH/scaling_best.json, the same",
-        "min-across-sweeps treatment the per-query table gets)."
-        + (
-            " This run's sweep IS the best committed sweep."
-            if is_current
-            else (
-                " This run's sweep was slower "
-                f"(primary {_sweep_primary_eff(latest)}) and is recorded in "
-                "the round's BENCH JSON artifact."
-            )
-        ),
-        f"The best observed top-core throughput across committed sweeps is {best_eps:,.1f} events/s.",
+        "a no-JVM multiprocessing sha256 probe run in the same load windows",
+        "as the Spark trials: how much parallelism the host physically",
+        "delivered while they ran. The last column divides the engine's",
+        "efficiency by that ceiling. The supplementary pair runs up to every",
+        "host core; on an overcommitted host its efficiency measures the",
+        "hypervisor, so read it against its own ceiling column.",
         "",
         "## Headline query seconds (local[%d], %s)" % (CPUS, sf_dir),
         "",
-        "Per-query values are the MIN across committed quiet-window sweeps",
-        "(same min-of-trials statistic as the scaling table, applied across",
-        "windows — one-sided steal noise only ever inflates a window).",
+        "Each value is the faster of this run's two passes over the list",
+        "(the first pass also pays JVM/JIT/codegen warm-up).",
         "",
         "| query | seconds |",
         "|---|---|",
     ]
-    # cross-window minima: merge with the per-query values already
-    # committed in BASELINE.md (parsed tail-scoped above) so a slow
-    # window never degrades the baseline
-    for k, v in queries.items():
-        lines.append(f"| {k} | {min(v, prior.get(k, v))} |")
-    baseline_path.write_text("\n".join(lines) + "\n")
+    lines += [f"| {k} | {v} |" for k, v in queries.items()]
+    (REPO / "BENCH" / "BASELINE.md").write_text("\n".join(lines) + "\n")
 
 
 def main() -> None:
@@ -603,8 +426,6 @@ def main() -> None:
         top = max(scaling["configs"].values(), key=lambda c: c["cores"])
         result["cdc_events_per_sec"] = top["events_per_sec"]
         write_baseline_md(scaling, qtimes, SF_DIR)
-    else:
-        merge_query_minima(qtimes)
 
     print(json.dumps(result))
 

@@ -459,14 +459,19 @@ def phash_near_dups(
     max_hamming: int = 8,
 ) -> DataFrame:
     """Banded Hamming pairs over dHash bit strings — the simhash_near_dups
-    banding transposed to the image hash: two images within ``max_hamming``
-    differing bits must agree exactly on at least one of ``n_bands``
-    16-bit bands whenever max_hamming < n_bands (pigeonhole), so
-    candidates come from ``n_bands`` equi-joins on (band_idx, band_bits)
-    — never an all-pairs comparison — and the exact Hamming distance is
+    banding transposed to the image hash: candidates come from ``n_bands``
+    equi-joins on (band_idx, band_bits) of ``64 // n_bands``-bit bands —
+    never an all-pairs comparison — and the exact Hamming distance is
     verified only inside buckets. Output (id_a, id_b, hamming),
     id_a < id_b, distinct. ``n_bands`` must divide 64, so the bands cover
-    every bit."""
+    every bit.
+
+    Recall is complete only when max_hamming < n_bands: then two images
+    within ``max_hamming`` differing bits agree exactly on at least one
+    band (pigeonhole). Otherwise it is candidate recall: a pair is missed
+    when its differing bits hit every band. At the defaults (4 bands,
+    max_hamming 8) a pair 4 bits apart, one bit in each 16-bit band, is
+    not returned; ``n_bands=16`` finds it."""
     if n_bands < 1 or 64 % n_bands:
         raise ValueError(f"n_bands must divide 64, got {n_bands}")
     width = 64 // n_bands

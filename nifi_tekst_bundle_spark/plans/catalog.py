@@ -1694,9 +1694,12 @@ def q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (multimodal.image_phash — the image analogue of simhash), then
     banded 16-bit equi-joins generate candidates and exact Hamming ≤ 8
     verifies them (multimodal.phash_near_dups) — never an all-pairs
-    comparison. Runs the stub decode (payload prefix as pixels) so the ENTIRE
-    mapInPandas → banding → verify pipeline is driver-checked against
-    DuckDB bit-for-bit; the real pixel path (PIL / pure-python PNG+BMP
+    comparison. With 4 bands and Hamming ≤ 8 this is candidate recall,
+    not complete recall: a pair whose differing bits hit all four bands
+    is missed (the DuckDB oracle bands the same way). Runs the stub
+    decode (payload prefix as pixels) so the ENTIRE mapInPandas →
+    banding → verify pipeline is driver-checked against DuckDB
+    bit-for-bit; the real pixel path (PIL / pure-python PNG+BMP
     decode → 8×9 average pool) is pinned on real image bytes in
     tests/test_round5_features.py. Duplicate texts ⇒ identical payload
     ⇒ Hamming 0, so the fixture's planted dup groups surface here."""

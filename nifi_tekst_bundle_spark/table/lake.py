@@ -807,7 +807,6 @@ class LakeTable:
         batch_id: str | None = None,
         epoch_id: int = -1,
         hot_key_threshold: int | None = None,
-        n_salts: int = 8,
         commit_retries: int = 2,
     ) -> bool:
         """Apply one declarative change batch as an atomic, fenced commit.
@@ -835,7 +834,7 @@ class LakeTable:
             try:
                 return self._merge_batch_once(
                     spark, events, fence_key, batch_id, epoch_id,
-                    hot_key_threshold, n_salts,
+                    hot_key_threshold,
                 )
             except ConcurrentCommitError:
                 # Retrying is only useful if another writer actually
@@ -871,7 +870,6 @@ class LakeTable:
         batch_id: str | None,
         epoch_id: int,
         hot_key_threshold: int | None,
-        n_salts: int,
     ) -> bool:
         m = self.manifest()
         if fence_key in m.committed:
@@ -923,7 +921,7 @@ class LakeTable:
             )
             salted = bool(row and row[0] and row[0] > hot_key_threshold)
         if salted:
-            bregs = lww.salted_batch_registers(normalized, payload_cols, n_salts=n_salts)
+            bregs = lww.salted_batch_registers(normalized, payload_cols)
         else:
             bregs = lww.batch_registers(normalized, payload_cols)
         # ONE aggregate over the persisted normalized batch: lineage per

@@ -19,8 +19,9 @@ hit the commit fence and apply nothing (see streaming/runner.py). The same
 script run twice against the same log is a no-op the second time — that is
 the exactly-once contract, testable on any cluster.
 
-On local[N] this is exactly the job bench.py measures at two parallelism
-levels for the scaling-efficiency evidence.
+This is the fenced commit path that `perfbench/` measures. bench.py's
+scaling sweep measures less: scan -> validate -> LWW -> `noop` sink, with
+no fenced commit.
 """
 
 from __future__ import annotations

@@ -258,6 +258,25 @@ def test_phash_near_dups_rejects_bands_not_dividing_64(spark, n_bands):
         multimodal.phash_near_dups(sig, n_bands=n_bands)
 
 
+def test_phash_near_dups_default_bands_are_candidate_recall(spark):
+    """4 differing bits, one in each 16-bit band: within max_hamming=8, but
+    no band agrees, so the default 4 bands miss the pair; with 16 bands
+    max_hamming < n_bands, so some band must agree and the pair is found."""
+    from nifi_tekst_bundle_spark.operators import multimodal
+
+    base = "01" * 32
+    flipped = list(base)
+    for band in range(4):
+        i = band * 16 + 5
+        flipped[i] = "1" if base[i] == "0" else "0"
+    sig = spark.createDataFrame(
+        [(0, base), (1, "".join(flipped))], "media_id long, phash_bits string"
+    )
+    assert multimodal.phash_near_dups(sig, n_bands=4, max_hamming=8).count() == 0
+    found = multimodal.phash_near_dups(sig, n_bands=16, max_hamming=8).collect()
+    assert [(r["id_a"], r["id_b"], r["hamming"]) for r in found] == [(0, 1, 4)]
+
+
 def test_image_phash_unrecognized_bytes_raise(spark):
     from nifi_tekst_bundle_spark.operators import multimodal
 
