@@ -233,14 +233,12 @@ def run_scaling(sf_dir: str, cpus: int) -> dict:
     # Two N→4N pairs, both reported: the first is the primary criterion
     # pair, the second (up to all host cores) is supplementary, because on
     # an overcommitted host its efficiency measures the hypervisor — read
-    # it against its own same-window raw-CPU ceiling. Pairs are clamped to
-    # the host's CPU count (more threads than cores measures
-    # oversubscription) and deduped (at CPUS=8 both give (2, 8)).
-    raw_pairs = [
-        (max(cpus // 8, 2), min(max(cpus // 2, 8), cpus)),
-        (max(cpus // 4, 2), cpus),
-    ]
-    pairs = list(dict.fromkeys(p for p in raw_pairs if p[0] < p[1]))
+    # it against its own same-window raw-CPU ceiling. The 4N side is
+    # clamped to the host's CPU count (more threads than cores measures
+    # oversubscription), N is exactly a quarter of it, and pairs are
+    # deduped (at CPUS=8 both give (2, 8); at CPUS=4 both give (1, 4)).
+    his = [min(max(cpus // 2, 8), cpus), cpus]
+    pairs = list(dict.fromkeys((hi // 4, hi // 4 * 4) for hi in his if hi >= 4))
     cores_list = sorted({c for p in pairs for c in p})
     rounds = int(os.environ.get("BENCH_SCALING_ROUNDS", "3"))
     runs = int(os.environ.get("BENCH_SCALING_RUNS", "6"))

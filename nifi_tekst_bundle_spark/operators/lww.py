@@ -38,21 +38,19 @@ def register_columns(payload_cols: list[str]) -> list[str]:
 
 def batch_registers(normalized: DataFrame, payload_cols: list[str]) -> DataFrame:
     """Aggregate a normalized event batch (op ∈ {insert,update,delete}) into
-    per-key registers. Single hash aggregate → one shuffle on the key.
+    per-key registers. Single aggregate → one shuffle on the key.
+
+    This is also the engine's hot-key skew handling: every aggregate is a
+    max, so Spark runs ``partial_max`` map-side below the one Exchange and
+    a hot key reaches its reducer as at most one partial row per map task
+    (pinned by test_batch_registers_partial_agg_below_one_exchange; the
+    ``cdc_hot_key`` query runs ~50% of a batch on one key).
 
     The argmax-by-lsn per column uses max over struct(lsn, value): Spark
     orders structs lexicographically and max ignores nulls, so
     ``max(when(value is not null, struct(lsn, value)))`` IS the highest-lsn
     non-null assignment.
     """
-    return batch_registers_grouped(normalized, payload_cols, KEY)
-
-
-def batch_registers_grouped(
-    normalized: DataFrame, payload_cols: list[str], group_cols: list[str]
-) -> DataFrame:
-    """:func:`batch_registers` over an arbitrary grouping (the salted
-    two-phase path groups on KEY + salt)."""
     is_del = F.col("op") == "delete"
     aggs = [
         F.coalesce(F.max(F.when(~is_del, F.col("lsn"))), F.lit(-1)).alias("_lsn_up"),
@@ -67,58 +65,8 @@ def batch_registers_grouped(
                 )
             ).alias(f"_m_{c}")
         )
-    agg = normalized.groupBy(*group_cols).agg(*aggs)
-    out = agg.select(
-        *group_cols,
-        "_lsn_up",
-        "_lsn_del",
-        *[
-            x
-            for c in payload_cols
-            for x in (
-                F.col(f"_m_{c}.v").alias(c),
-                F.coalesce(F.col(f"_m_{c}.l"), F.lit(-1)).alias(f"_l_{c}"),
-            )
-        ],
-    )
-    return out
-
-
-def salted_batch_registers(
-    normalized: DataFrame,
-    payload_cols: list[str],
-    n_salts: int = 8,
-) -> DataFrame:
-    """Skew-proof variant of :func:`batch_registers`: two-phase aggregation
-    salted on ``lsn`` (deterministic — never random, replays are stable).
-
-    Phase 1 aggregates on (key, salt), spreading a hot key over ``n_salts``
-    shuffle partitions; phase 2 merges the ≤``n_salts`` partial registers
-    per key. Exact by construction — the register merge (max / argmax-by-
-    lsn) is associative and commutative, the same property that makes
-    micro-batch boundaries invisible. Use when per-batch hot-key detection
-    (operators.skew.detect_hot_keys) fires; the plain single-agg path is
-    cheaper for unskewed batches (AQE splits skewed joins but not skewed
-    aggregations, SURVEY.md §4)."""
-    salt = F.pmod(F.xxhash64(F.col("lsn")), F.lit(n_salts)).cast("int")
-    partial = batch_registers_grouped(
-        normalized.withColumn("_salt", salt), payload_cols, KEY + ["_salt"]
-    )
-    aggs = [
-        F.max("_lsn_up").alias("_lsn_up"),
-        F.max("_lsn_del").alias("_lsn_del"),
-    ]
-    for c in payload_cols:
-        aggs.append(
-            F.max(
-                F.when(
-                    F.col(f"_l_{c}") >= 0,
-                    F.struct(F.col(f"_l_{c}").alias("l"), F.col(c).alias("v")),
-                )
-            ).alias(f"_m_{c}")
-        )
-    merged = partial.groupBy(*KEY).agg(*aggs)
-    return merged.select(
+    agg = normalized.groupBy(*KEY).agg(*aggs)
+    return agg.select(
         *KEY,
         "_lsn_up",
         "_lsn_del",
@@ -169,18 +117,16 @@ def combine_registers(
 ) -> DataFrame:
     """Merge batch registers into stored registers (the MERGE body).
 
-    Full-outer join on the key; the batch side is the per-epoch aggregate —
-    tiny relative to the table — so at scale this runs against only the
-    key-touched buckets (see table.lake) with the batch side broadcast.
+    Full-outer join on the key. A full-outer join cannot broadcast either
+    side, so it shuffles both; the batch side is the per-epoch aggregate —
+    tiny relative to the table — and at scale the state side is only the
+    key-touched buckets (see table.lake).
     """
     t = _align(state, payload_cols).alias("t")
     b = _align(batch, payload_cols).alias("b")
     joined = t.join(b, KEY, "full_outer")
-    sel: list[Column] = [
-        F.coalesce(F.col(f"t.{k}"), F.col(f"b.{k}")).alias(k) for k in []
-    ]
     # join on key with USING semantics keeps unambiguous key columns
-    sel = [F.col(k) for k in KEY]
+    sel: list[Column] = [F.col(k) for k in KEY]
     sel.append(
         F.greatest(
             F.coalesce(F.col("t._lsn_up"), F.lit(-1)),

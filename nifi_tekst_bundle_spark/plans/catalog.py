@@ -2729,12 +2729,13 @@ def q_conv_document_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# A4/O1 under deliberate skew (the north-star's "salted-key repartitioning
-# to defuse hot-conversation skew"): ~half of all change events target ONE
-# (conv_id, turn_idx) key, and the merge runs through the production table
-# path with hot-key detection enabled, so the salted two-phase register
-# aggregation (operators.lww.salted_batch_registers) is exercised
-# end-to-end under the oracle — previously pytest-only.
+# A4/O1 under deliberate skew (the north-star's "defuse hot-conversation
+# skew"): ~half of all change events target ONE (conv_id, turn_idx) key, and
+# the merge runs through the production table path. The register fold
+# (operators.lww.batch_registers) is max/argmax, so Spark aggregates it
+# map-side before its one shuffle and the hot key reaches its reducer as
+# one partial row per map task; this row checks that end to end under the
+# oracle.
 CDC_HOT_KEY_SQL = f"""
 WITH ev AS (
   SELECT event_id + 1 AS lsn,
@@ -2814,11 +2815,10 @@ def derive_hot_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cdc_hot_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hot-key skew through the PRODUCTION path: merge_batch with hot-key
-    detection on, so the per-key count probe fires and the salted
-    two-phase register aggregation handles the ~50%%-on-one-key batch
-    (exact by the register algebra's associativity — same oracle shape as
-    cdc_lww_final_state over the skewed derivation)."""
+    """Hot-key skew through the PRODUCTION path: merge_batch over the
+    ~50%%-on-one-key batch, whose register fold is partially aggregated
+    map-side (exact by the register algebra's associativity — same oracle
+    shape as cdc_lww_final_state over the skewed derivation)."""
     from ..table.lake import LakeTable
 
     events = derive_hot_key_events(spark, sf_dir)
@@ -2827,7 +2827,7 @@ def q_cdc_hot_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, os.path.join(tmp, "table"), payload_cols=CDC_PAYLOAD, n_buckets=8
     )
     applied = table.merge_batch(
-        spark, events, fence_key="hot/e0/b00", epoch_id=0, hot_key_threshold=100
+        spark, events, fence_key="hot/e0/b00", epoch_id=0
     )
     assert applied, "hot-key merge must commit"
     return table.visible(spark)

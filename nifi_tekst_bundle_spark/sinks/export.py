@@ -28,11 +28,21 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.dedup import hash64
+
+
+def _refuse_existing(out_dir: str) -> None:
+    if os.path.exists(os.path.join(out_dir, "_MANIFEST.json")):
+        raise ValueError(
+            f"export target {out_dir} already has a manifest; exports are "
+            "immutable — write a new directory"
+        )
 
 
 def export_jsonl_shards(
@@ -49,11 +59,7 @@ def export_jsonl_shards(
     are immutable artifacts — write a new directory per export, the
     lake's snapshot discipline)."""
     manifest_path = os.path.join(out_dir, "_MANIFEST.json")
-    if os.path.exists(manifest_path):
-        raise ValueError(
-            f"export target {out_dir} already has a manifest; exports are "
-            "immutable — write a new directory"
-        )
+    _refuse_existing(out_dir)
     hkey = F.md5(F.col(id_col).cast("string").cast("binary"))
     shard = (
         hash64(F.col(id_col).cast("string")) % n_shards
@@ -150,7 +156,11 @@ def export_delta_jsonl(
       tests/test_export_sink.py::test_delta_export_reconstructs_head.
     - a version range with NO logical changes (maintenance-only commits:
       optimize_layout, compact, tag) is a legitimate empty delta: the
-      manifest is written with zero shards and n_touched = 0.
+      manifest is written with zero shards and n_touched = 0;
+    - the export is atomic: it is built in a hidden sibling directory and
+      renamed onto ``out_dir`` after its final manifest is written, so a
+      crash mid-export leaves ``out_dir`` absent (a retry into it works)
+      and never a readable export missing its tombstones.
 
     Scale: the diff comes from ``table.table_changes`` (bucket-pruned —
     reads only buckets whose file lists differ between the manifests), the
@@ -168,52 +178,40 @@ def export_delta_jsonl(
         raise ValueError(
             f"base_version {base_version} is not below HEAD {head}"
         )
+    _refuse_existing(out_dir)
     diff = table.table_changes(spark, base_version, head)
     touched = diff.select(F.col(key_col)).distinct().persist()
+    # the whole delta (rows, tombstones, final manifest) is built in a
+    # hidden sibling and renamed into place last: a crash at any step
+    # leaves no out_dir at all, never rows without their deletions
+    parent, name = os.path.split(os.path.abspath(out_dir))
+    tmp = os.path.join(parent, f".{name}.tmp-{uuid.uuid4().hex[:12]}")
     try:
         n_touched = touched.count()
         if n_touched == 0:
-            os.makedirs(out_dir, exist_ok=True)
-            manifest = {
-                "n_shards": int(n_shards),
-                "total_rows": 0,
-                "shards": {},
-                "delta": {
-                    "base_version": int(base_version),
-                    "head_version": int(head),
-                    "n_touched": 0,
-                    "n_deleted": 0,
-                    "tombstone_shards": {},
-                },
-            }
-            manifest_path = os.path.join(out_dir, "_MANIFEST.json")
-            if os.path.exists(manifest_path):
-                raise ValueError(
-                    f"export target {out_dir} already has a manifest; "
-                    "exports are immutable — write a new directory"
-                )
-            with open(manifest_path, "w") as f:
-                json.dump(manifest, f, indent=1, sort_keys=True)
-            return manifest
-        vis = table.visible(spark).join(touched, key_col, "left_semi")
-        manifest = export_jsonl_shards(
-            vis, out_dir, n_shards, key_col, compression
-        )
-        # tombstones: touched keys with no surviving visible row — an
-        # anti-join against the exported keys, sharded to disk like any
-        # other export (the driver never holds a key)
-        deleted = touched.join(
-            table.visible(spark).select(key_col).distinct(),
-            key_col,
-            "left_anti",
-        )
-        tomb = export_jsonl_shards(
-            deleted,
-            os.path.join(out_dir, "_tombstones"),
-            n_shards,
-            key_col,
-            compression,
-        )
+            os.makedirs(tmp)
+            manifest = {"n_shards": int(n_shards), "total_rows": 0, "shards": {}}
+            tomb = {"total_rows": 0, "shards": {}}
+        else:
+            vis = table.visible(spark).join(touched, key_col, "left_semi")
+            manifest = export_jsonl_shards(
+                vis, tmp, n_shards, key_col, compression
+            )
+            # tombstones: touched keys with no surviving visible row — an
+            # anti-join against the exported keys, sharded to disk like any
+            # other export (the driver never holds a key)
+            deleted = touched.join(
+                table.visible(spark).select(key_col).distinct(),
+                key_col,
+                "left_anti",
+            )
+            tomb = export_jsonl_shards(
+                deleted,
+                os.path.join(tmp, "_tombstones"),
+                n_shards,
+                key_col,
+                compression,
+            )
         manifest["delta"] = {
             "base_version": int(base_version),
             "head_version": int(head),
@@ -221,12 +219,13 @@ def export_delta_jsonl(
             "n_deleted": int(tomb["total_rows"]),
             "tombstone_shards": tomb["shards"],
         }
-        manifest_path = os.path.join(out_dir, "_MANIFEST.json")
-        with open(manifest_path, "w") as f:
+        with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
             json.dump(manifest, f, indent=1, sort_keys=True)
+        os.replace(tmp, out_dir)
         return manifest
     finally:
         touched.unpersist()
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def read_delta_tombstones(spark, out_dir: str) -> "DataFrame | None":

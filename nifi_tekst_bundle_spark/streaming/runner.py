@@ -21,8 +21,10 @@ becomes a Structured Streaming file source over the event log with
 
 Scale note: ``maxFilesPerTrigger`` bounds epoch size; producer batches stay
 whole because the tailer writes one file per batch (fixtures analogue of a
-binlog segment). Hot-key skew inside an epoch is defused by AQE plus the
-salting helpers in operators.skew.
+binlog segment). Hot-key skew inside an epoch needs no salting: the LWW
+register fold is max/argmax, so Spark aggregates it map-side before its one
+shuffle and a hot key reaches its reducer as one partial row per map task
+(see lww.batch_registers).
 """
 
 from __future__ import annotations
@@ -123,12 +125,9 @@ def batch_move_runs(
 
 
 def make_apply_fn(table: LakeTable, run_id: str, stats: StreamStats,
-                  fail_after: list[int] | None = None,
-                  hot_key_threshold: int | None = None):
+                  fail_after: list[int] | None = None):
     """foreachBatch body. ``fail_after`` injects a crash after N producer
     batches applied (failure-injection tests — ReorderFilesTest.kt:319-345).
-    ``hot_key_threshold`` enables per-batch hot-key detection + salted
-    two-phase aggregation in the merge (see LakeTable.merge_batch).
     Consecutive move-free producer batches merge into one fenced commit
     (see plan_runs); the grouping is a pure function of the epoch's data,
     so a crash-restart re-derives identical fences."""
@@ -146,7 +145,6 @@ def make_apply_fn(table: LakeTable, run_id: str, stats: StreamStats,
                 applied = table.merge_batch(
                     epoch_df.sparkSession, sub, fence_key=fence,
                     batch_id=",".join(batch_ids), epoch_id=epoch_id,
-                    hot_key_threshold=hot_key_threshold,
                 )
                 if applied:
                     stats.batches_applied += len(batch_ids)
@@ -209,7 +207,6 @@ def start_continuous(
     processing_time: str = "500 milliseconds",
     max_files_per_trigger: int = 1,
     fail_after: list[int] | None = None,
-    hot_key_threshold: int | None = None,
     source_format: str = "parquet",
 ):
     """Long-running production mode: a ProcessingTime trigger that keeps
@@ -228,7 +225,7 @@ def start_continuous(
     src = _source(spark, events_dir, max_files_per_trigger, source_format)
     q = (
         src.writeStream.foreachBatch(
-            make_apply_fn(table, run_id, stats, fail_after, hot_key_threshold)
+            make_apply_fn(table, run_id, stats, fail_after)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=processing_time)
@@ -276,7 +273,6 @@ def run_to_completion(
     run_id: str = "run",
     max_files_per_trigger: int = 1,
     fail_after: list[int] | None = None,
-    hot_key_threshold: int | None = None,
     source_format: str = "parquet",
 ) -> StreamStats:
     """Consume everything currently in events_dir (Trigger.AvailableNow),
@@ -286,7 +282,7 @@ def run_to_completion(
     src = _source(spark, events_dir, max_files_per_trigger, source_format)
     q = (
         src.writeStream.foreachBatch(
-            make_apply_fn(table, run_id, stats, fail_after, hot_key_threshold)
+            make_apply_fn(table, run_id, stats, fail_after)
         )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)

@@ -806,19 +806,12 @@ class LakeTable:
         fence_key: str,
         batch_id: str | None = None,
         epoch_id: int = -1,
-        hot_key_threshold: int | None = None,
         commit_retries: int = 2,
     ) -> bool:
         """Apply one declarative change batch as an atomic, fenced commit.
 
         Returns False (structural no-op) if the fence key was already
         committed — the exactly-once re-delivery path.
-
-        ``hot_key_threshold``: when set, a cheap per-key count (map-side
-        combinable, skew-safe) probes the batch; if any (conv_id, turn_idx)
-        key exceeds the threshold the register aggregation runs the salted
-        two-phase path (lww.salted_batch_registers) so a hot conversation
-        cannot pin an epoch to one shuffle partition.
 
         Optimistic concurrency: on ConcurrentCommitError (another writer won
         the manifest CAS) the whole merge re-reads HEAD, re-resolves against
@@ -833,8 +826,7 @@ class LakeTable:
             head_before = self._head_version()
             try:
                 return self._merge_batch_once(
-                    spark, events, fence_key, batch_id, epoch_id,
-                    hot_key_threshold,
+                    spark, events, fence_key, batch_id, epoch_id
                 )
             except ConcurrentCommitError:
                 # Retrying is only useful if another writer actually
@@ -869,7 +861,6 @@ class LakeTable:
         fence_key: str,
         batch_id: str | None,
         epoch_id: int,
-        hot_key_threshold: int | None,
     ) -> bool:
         m = self.manifest()
         if fence_key in m.committed:
@@ -911,19 +902,7 @@ class LakeTable:
         normalized, dead = resolve_batch(events, payload_cols, pre_visible, lsn_wm)
         normalized = normalized.persist()
 
-        salted = False
-        if hot_key_threshold is not None:
-            row = (
-                normalized.groupBy(*lww.KEY)
-                .count()
-                .agg(F.max("count"))
-                .first()
-            )
-            salted = bool(row and row[0] and row[0] > hot_key_threshold)
-        if salted:
-            bregs = lww.salted_batch_registers(normalized, payload_cols)
-        else:
-            bregs = lww.batch_registers(normalized, payload_cols)
+        bregs = lww.batch_registers(normalized, payload_cols)
         # ONE aggregate over the persisted normalized batch: lineage per
         # partition, and the touched buckets (bregs is keyed on exactly the
         # keys of normalized, so its buckets are the batch's buckets)

@@ -47,11 +47,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--run-id", default="run")
     p.add_argument("--max-files-per-trigger", type=int, default=4)
     p.add_argument("--n-buckets", type=int, default=64)
-    p.add_argument(
-        "--hot-key-threshold", type=int, default=500_000,
-        help="per-batch events-per-key threshold that flips the LWW "
-        "aggregation to the salted two-phase path (0 disables)",
-    )
     args = p.parse_args(argv)
 
     from nifi_tekst_bundle_spark.streaming import runner
@@ -74,7 +69,6 @@ def main(argv: list[str] | None = None) -> int:
         args.checkpoint,
         run_id=args.run_id,
         max_files_per_trigger=args.max_files_per_trigger,
-        hot_key_threshold=args.hot_key_threshold or None,
     )
     print(
         json.dumps(

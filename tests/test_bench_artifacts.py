@@ -41,6 +41,7 @@ def test_run_scaling_runs_the_declared_trials_below_criterion(monkeypatch):
     out = bench.run_scaling("/sf", 32)
     # pairs (4, 16) primary and (8, 32) supplementary
     assert out["trials"] == {"4": 6, "8": 2, "16": 6, "32": 2}
+    assert [(p["n"], p["4n"]) for p in out["pairs"]] == [(4, 16), (8, 32)]
     assert {c: cfg["trials"] for c, cfg in out["configs"].items()} == out["trials"]
     # one warm-up apply per config per round on top of the timed ones
     assert len(calls) == 16 + 2 * 4
@@ -51,6 +52,13 @@ def test_run_scaling_runs_the_declared_trials_below_criterion(monkeypatch):
     for cfg in out["configs"].values():
         assert cfg["seconds"] <= cfg["median_seconds"]
     assert "median_efficiency" in primary
+
+    # a small host still gets an N→4N pair, never a 2× step labelled 4×
+    for cpus, want in ((4, [(1, 4)]), (8, [(2, 8)]), (16, [(2, 8), (4, 16)])):
+        out = bench.run_scaling("/sf", cpus)
+        pairs = [(p["n"], p["4n"]) for p in out["pairs"]]
+        assert pairs == want, cpus
+        assert all(hi == 4 * lo for lo, hi in pairs)
 
 
 def test_materialize_events_keys_on_sf_and_needs_success(monkeypatch, tmp_path):

@@ -146,11 +146,36 @@ def test_new_round2_queries_stay_jvm_side(spark):
     assert "BatchEvalPython" not in media  # never per-row pickled Python
 
 
+def test_batch_registers_partial_agg_below_one_exchange(spark):
+    """Hot-key skew needs no salted path because the LWW register fold is
+    max/argmax: its physical plan runs a ``partial_max`` aggregate map-side
+    below exactly ONE hash Exchange, so a hot key reaches its reducer as at
+    most one partial row per map task."""
+    from nifi_tekst_bundle_spark.operators import lww
+
+    ev = spark.range(400).select(
+        (F.col("id") + 1).alias("lsn"),
+        F.when(F.col("id") % 11 == 0, F.lit("delete"))
+        .otherwise(F.lit("update"))
+        .alias("op"),
+        F.lit("conv-hot").alias("conv_id"),
+        (F.col("id") % 3).cast("int").alias("turn_idx"),
+        F.concat(F.lit("t"), F.col("id")).alias("text"),
+    )
+    plan = _plan(lww.batch_registers(ev, ["text"]))
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    above, below = plan.split("Exchange hashpartitioning")
+    # max over struct(lsn, value) plans as a sort-based aggregate; either
+    # way the partial half runs below the shuffle, the final half above it
+    assert "Aggregate(" in below and "partial_max(" in below, plan
+    assert "Aggregate(" in above and "partial_max(" not in above, plan
+
+
 def test_new_round3_queries_stay_jvm_side(spark):
     """Round-3 oracle queries keep the scale posture: XPath extraction runs
     through Hive's JVM-side xpath UDFs (no Python), the versioned document
-    render is one aggregation, the hot-key query's salted two-phase agg is
-    still pure JVM."""
+    render is one aggregation, the hot-key query's register fold (partial
+    aggregation map-side, then one shuffle) is still pure JVM."""
     for q in (
         catalog.q_xml_extract,
         catalog.q_conv_document_v2,

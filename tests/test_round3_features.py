@@ -1,5 +1,5 @@
-"""Round-3 feature coverage: ProcessingTime runner mode, hot-key salted
-path through the catalog query, XPath helpers, versioned document render."""
+"""Round-3 feature coverage: ProcessingTime runner mode, XPath helpers,
+versioned document render."""
 
 from __future__ import annotations
 
@@ -59,25 +59,6 @@ def test_xpath_wrappers_namespace_agnostic(spark):
     assert row["lbl"] == "hello & goodbye"
     assert row["miss"] is None
     assert row["has"] is True
-
-
-# ------------------------------------------------- hot key through salting
-
-
-def test_hot_key_catalog_query_triggers_salted_path(spark, monkeypatch):
-    from nifi_tekst_bundle_spark.operators import lww
-
-    called = {"n": 0}
-    orig = lww.salted_batch_registers
-
-    def spy(*a, **k):
-        called["n"] += 1
-        return orig(*a, **k)
-
-    monkeypatch.setattr(lww, "salted_batch_registers", spy)
-    n = catalog.q_cdc_hot_key(spark, SF_SMALL).count()
-    assert called["n"] >= 1, "hot-key probe must route to the salted two-phase agg"
-    assert n > 0
 
 
 def test_conv_document_v2_dispatches_both_versions(spark):

@@ -1,106 +1,19 @@
-"""Skew salting + cascade cleanup operator tests."""
+"""Hot-key commit + cascade cleanup operator tests."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pandas as pd
 
-from nifi_tekst_bundle_spark.operators import cleanup, skew
-
-
-def _skewed_events(spark, hot_n=2000, cold_n=50):
-    hot = spark.range(hot_n).select(
-        F.lit("conv-hot").alias("conv_id"),
-        (F.col("id") % 5).cast("int").alias("turn_idx"),
-        F.col("id").alias("lsn"),
-        (F.col("id") * 2).cast("double").alias("v"),
-    )
-    cold = spark.range(cold_n).select(
-        F.concat(F.lit("conv-"), F.col("id").cast("string")).alias("conv_id"),
-        F.lit(1).cast("int").alias("turn_idx"),
-        (F.col("id") + 100000).alias("lsn"),
-        F.lit(1.0).alias("v"),
-    )
-    return hot.union(cold)
+from nifi_tekst_bundle_spark.operators import cleanup
 
 
-def test_detect_hot_keys(spark):
-    ev = _skewed_events(spark)
-    hot = skew.detect_hot_keys(ev, ["conv_id"], threshold=100).collect()
-    assert [r["conv_id"] for r in hot] == ["conv-hot"]
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    ev = _skewed_events(spark)
-    salted = skew.salted_repartition(ev, ["conv_id"], n_partitions=8, n_salts=8)
-    dist = (
-        salted.filter(F.col("conv_id") == "conv-hot")
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
-    # the hot key lands on several partitions, not one
-    assert len(dist) >= 4
-    assert max(r["count"] for r in dist) < 2000
-
-
-def test_salted_agg_matches_plain_agg(spark):
-    ev = _skewed_events(spark)
-    plain = {
-        (r["conv_id"], r["turn_idx"]): (r["mx"], r["cnt"])
-        for r in ev.groupBy("conv_id", "turn_idx")
-        .agg(F.max("lsn").alias("mx"), F.count("*").alias("cnt"))
-        .collect()
-    }
-    salted = {
-        (r["conv_id"], r["turn_idx"]): (r["mx"], r["cnt"])
-        for r in skew.salted_agg(
-            ev.withColumn("mx", F.col("lsn")).withColumn("cnt", F.lit(1)),
-            ["conv_id", "turn_idx"],
-            {"mx": (F.max, F.max), "cnt": (F.sum, F.sum)},
-        ).collect()
-    }
-    assert plain == salted
-
-
-def test_salted_batch_registers_exact(spark):
-    """The salted two-phase LWW aggregation is EXACT (associative merge):
-    same registers as the single-agg path on a pathologically hot key,
-    including deletes and null payload columns."""
-    from nifi_tekst_bundle_spark.operators import lww
-
-    ev = spark.range(3000).select(
-        (F.col("id") + 1).alias("lsn"),
-        F.lit("b0").alias("batch_id"),
-        F.when(F.col("id") % 11 == 0, F.lit("delete"))
-        .otherwise(F.lit("update"))
-        .alias("op"),
-        F.lit("conv-hot").alias("conv_id"),
-        (F.col("id") % 3).cast("int").alias("turn_idx"),
-        F.when(F.col("id") % 2 == 0, F.concat(F.lit("t"), F.col("id"))).alias(
-            "text"
-        ),
-        F.when(F.col("id") % 5 == 0, F.lit("toolx")).alias("tool"),
-    )
-    cols = ["text", "tool"]
-    plain = {
-        (r["conv_id"], r["turn_idx"]): r.asDict()
-        for r in lww.batch_registers(ev, cols).collect()
-    }
-    for n_salts in (2, 8):
-        salted = {
-            (r["conv_id"], r["turn_idx"]): r.asDict()
-            for r in lww.salted_batch_registers(ev, cols, n_salts=n_salts).collect()
-        }
-        assert salted == plain
-
-
-def test_merge_batch_salted_path_matches(spark, tmp_path):
-    """merge_batch with hot-key detection enabled produces the same table
-    as the plain path."""
-    from nifi_tekst_bundle_spark import fixtures
+def test_merge_batch_hot_key_matches_oracle(spark, tmp_path):
+    """A batch with 90% of its events on one conversation commits through
+    merge_batch to exactly the sequential oracle's table and dead letters
+    (the register fold's map-side partial aggregation is exact)."""
+    from nifi_tekst_bundle_spark import fixtures, oracle
     from nifi_tekst_bundle_spark.table.lake import LakeTable
-    from .conftest import spark_events, spark_seed
+    from .conftest import normalize_frame, spark_events, spark_seed
 
     seed = fixtures.make_seed_transcripts(n_convs=6, max_turns=4)
     log = fixtures.make_event_log(
@@ -109,22 +22,18 @@ def test_merge_batch_salted_path_matches(spark, tmp_path):
             n_batches=2, events_per_batch=80, hot_fraction=0.9, n_hot=1
         ),
     )
-    outs = []
-    for name, thresh in (("plain", None), ("salted", 1)):
-        t = LakeTable.create(
-            spark, str(tmp_path / name), seed_df=spark_seed(spark, seed), n_buckets=4
+    ora = oracle.replay(seed, log.batches)
+    t = LakeTable.create(
+        spark, str(tmp_path / "t"), seed_df=spark_seed(spark, seed), n_buckets=4
+    )
+    for i, b in enumerate(log.batches):
+        assert t.merge_batch(
+            spark, spark_events(spark, b), fence_key=f"r/e{i}", epoch_id=i
         )
-        for i, b in enumerate(log.batches):
-            t.merge_batch(
-                spark, spark_events(spark, b), fence_key=f"r/e{i}",
-                epoch_id=i, hot_key_threshold=thresh,
-            )
-        outs.append(
-            sorted(
-                tuple(r) for r in t.visible(spark).collect()
-            )
-        )
-    assert outs[0] == outs[1]
+    got = normalize_frame(t.visible(spark).toPandas())
+    want = normalize_frame(ora.state)
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    assert t.dead_letters(spark).count() == len(ora.dead_letters)
 
 
 def test_cascade_cleanup(spark):
